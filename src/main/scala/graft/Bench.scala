@@ -3,32 +3,32 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline query subset and prints ONE
   * machine-readable JSON line on stdout (also written to a plain file —
-  * see SPARK_GRAFT_BENCH_OUT below).
+  * see SPARK_GRAFT_BENCH_OUT below). This is what the ≤2× bench gate
+  * reads; regression judgement between two commits is `tools/ab.sh`'s
+  * job (paired, alternating runs of this main in separate JVMs).
   *
   * Methodology: each query runs THREE times and the headline number is
   * the per-query MIN (disclosed as "mode":"best-of-3", with every pass
-  * and its steal delta in the side-file JSON). Reasons, all measured:
-  *  - pass 1 is dominated by per-query codegen/plan-compile (~2-4s on the
-  *    many-stage dedup plans), not data throughput — pass1−pass2 is the
-  *    codegen cost, pass2≈pass3 is the reproducible throughput (the r7
-  *    d_clusters/m_decode_real attribution questions needed exactly this
-  *    split);
-  *  - this host is a shared microVM with bursty CPU steal (~20-50s
-  *    stalls observed landing on a random query: BENCH_r02 had
-  *    d_minhash_pairs at 19.4s where back-to-back local runs measure
-  *    5.1s cold / 1.9s steady; /proc/stat shows ~83 min cumulative
-  *    steal over 7.4h). min-of-3 bounds one burst's damage to a single
-  *    pass. SPARK_GRAFT_BENCH_ONESHOT=1 restores single-pass timing.
+  * and its steal delta in the side-file JSON). Pass 1 is dominated by
+  * per-query codegen/plan-compile (~2-4s on the many-stage dedup plans),
+  * not data throughput; pass2≈pass3 is the reproducible throughput, and
+  * on a shared host with bursty CPU steal min-of-3 bounds one burst's
+  * damage to a single pass. SPARK_GRAFT_BENCH_ONESHOT=1 times one pass.
+  *
+  * Query set: SparkEntry.benchQueries by default; SPARK_GRAFT_BENCH_FULL=1
+  * selects every registered query; SPARK_GRAFT_BENCH_ONLY=q1,q2 selects
+  * the named registered queries (an unknown name is refused).
+  *
+  * A pass that throws records no time. The sweep still finishes, then
+  * every failed query is named on stderr and Bench exits 1 without the
+  * JSON line, so a fast failure can never read as a speedup.
   */
 object Bench {
 
   /** Cumulative host steal time in jiffies from /proc/stat's aggregate
     * cpu line (field 8: user nice system idle iowait irq softirq STEAL).
     * -1 when unreadable (non-Linux). Snapshotted around every timed pass
-    * so a burst-inflated wall time is SELF-LABELING in the artifact —
-    * the r5 and r6 reviews both burned time adjudicating phantom
-    * regressions (t_tfidf 5.4 s vs 0.6 s clean) that were 20-50 s steal
-    * bursts landing on both passes of one query.
+    * so a burst-inflated wall time is labeled in the side file.
     */
   private def stealJiffies(): Long =
     try {
@@ -38,257 +38,16 @@ object Bench {
       finally src.close()
     } catch { case _: Throwable => -1L }
 
-  /** 1-minute loadavg (-1.0 when unreadable): snapshotted at run start
-    * and end so an artifact produced on a loaded host carries its own
-    * exculpatory evidence (the r8 driver run was 434 s wall vs 105 s
-    * normal and cost a judge adjudication to prove no regression).
+  /** Untimed warm-ups: JVM/codegen/parquet-reader startup (one cheap
+    * registered query), then ImageIO's plugin-registry scan, PNG
+    * reader/writer class loading and the getRGB sampling loops, which
+    * initialize/JIT once per JVM — local mode shares the JVM with
+    * executors, so this keeps one-time cost out of the first timed query
+    * and the m_* codec rows.
     */
-  private def loadAvg1m(): Double =
-    try {
-      val src = scala.io.Source.fromFile("/proc/loadavg")
-      try src.getLines().next().split("\\s+")(0).toDouble
-      finally src.close()
-    } catch { case _: Throwable => -1.0 }
-
-  /** Per-query historical minima folded from the repo's BENCH*.json
-    * artifacts — the tools/bench_minima.py lens, embedded so the round
-    * artifact SELF-REPORTS which apparent regressions exceed the
-    * historical-minimum envelope (a contended driver run otherwise
-    * costs a judge adjudication per drifted query). Same semantics as
-    * the script: artifacts whose telemetry says contended:true are
-    * never a minimum source; missing telemetry is trusted.
-    */
-  /** Normalize an artifact's `sf` field ("0.1" from the driver,
-    * "/root/testdata/sf0.1" from local runs) to its scale token so
-    * history never mixes scale factors — an sf0.01 artifact landing in
-    * the repo root would otherwise set unbeatable minima and corrupt
-    * the variance model for every sf0.1 run. */
-  private def sfToken(sf: String): String = {
-    val base = sf.stripSuffix("/").split('/').last
-    if (base.startsWith("sf")) base.stripPrefix("sf") else base
-  }
-
-  /** One clean historical artifact: its per-query times plus the
-    * host-day sentinel it recorded (-1 for pre-sentinel artifacts) and
-    * — since r19 — the steal each sentinel's OWN measurement window
-    * caught (-1 for older artifacts), so a contended capture whose
-    * sentinel windows were nonetheless steal-clean can still be
-    * normalized against. */
-  private final case class HistArtifact(sentinel: Double,
-      sentinelBw: Double, sentinelSteal: Double,
-      sentinelBwSteal: Double, contended: Boolean,
-      queries: Map[String, Double])
-
-  private def benchArtifacts(root: java.io.File,
-      sf: String): Vector[HistArtifact] = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val files = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("BENCH") &&
-        f.getName.endsWith(".json"))
-      .sortBy(_.getName)
-    files.toVector.flatMap { f =>
-      try {
-        val node = mapper.readTree(f)
-        val contended = node.path("contended").asBoolean(false)
-        val perPass = node.path("steal_sec_per_pass")
-        if (sfToken(node.path("sf").asText("")) != sfToken(sf)) None
-        else if (contended && !perPass.isObject) None
-        else {
-          // Per-QUERY clean minima when per-pass steal is recorded: a
-          // min taken over burst-free passes (steal ≤ stealFlagAt) is
-          // valid history regardless of what hit OTHER queries' passes
-          // — the old whole-artifact drop threw away ~200 clean
-          // observations because 1-2 passes elsewhere caught a burst,
-          // which on a shared box starves the minima/norm history
-          // forever (three r16 captures, every one flagged by a
-          // different 1-2 s burst). Artifacts without per-pass data
-          // keep the conservative all-or-nothing rule.
-          val flagAt = sys.env.get("SPARK_GRAFT_STEAL_FLAG")
-            .flatMap(_.toDoubleOption).getOrElse(1.0)
-          val qs = node.path("queries")
-          val passes = node.path("passes")
-          var m = Map.empty[String, Double]
-          if (qs.isObject) {
-            val it = qs.fields()
-            while (it.hasNext) {
-              val e = it.next()
-              val k = e.getKey
-              val v = e.getValue.asDouble(-1.0)
-              if (perPass.isObject && passes.isObject &&
-                  perPass.path(k).isArray && passes.path(k).isArray) {
-                val ps = passes.path(k)
-                val ss = perPass.path(k)
-                var best = Double.MaxValue
-                var i = 0
-                while (i < ps.size() && i < ss.size()) {
-                  val st = ss.get(i).asDouble(-1.0)
-                  val t = ps.get(i).asDouble(-1.0)
-                  if (t >= 0 && st >= 0 && st <= flagAt && t < best)
-                    best = t
-                  i += 1
-                }
-                if (best < Double.MaxValue) m = m.updated(k, best)
-                // no clean pass → this query contributes nothing
-              } else if (!contended && v >= 0) m = m.updated(k, v)
-            }
-          }
-          if (m.isEmpty) None
-          else Some(HistArtifact(
-            node.path("sentinel_sec").asDouble(-1.0),
-            node.path("sentinel_bw_sec").asDouble(-1.0),
-            node.path("sentinel_steal_sec").asDouble(-1.0),
-            node.path("sentinel_bw_steal_sec").asDouble(-1.0),
-            contended, m))
-        }
-      } catch { case _: Throwable => None }
-    }
-  }
-
-  private def benchHistory(arts: Vector[HistArtifact])
-      : Map[String, Vector[Double]] =
-    arts.foldLeft(Map.empty[String, Vector[Double]]) { (acc, a) =>
-      a.queries.foldLeft(acc) { case (m, (k, v)) =>
-        m.updated(k, m.getOrElse(k, Vector.empty) :+ v)
-      }
-    }
-
-  private def benchMinima(hist: Map[String, Vector[Double]])
-      : Map[String, Double] =
-    hist.view.mapValues(_.min).toMap
-
-  /** Host-day sentinel (judge r15 #2 / ROADMAP r16 #4): a FIXED
-    * synthetic job — range → xxhash64 → one-stage sum — that is pure
-    * CPU (no scan, no shuffle, no code that ever changes with the
-    * registry), timed best-of-3 at sweep start AND end. Two rounds in
-    * a row (r14 +8.7%, r15 +7.7%) paid a manual adjudication proving a
-    * uniform per-query drift was the host running slower that day; the
-    * sentinel measures exactly that profile, so the artifact can
-    * normalize for it: each historical artifact's query times divide
-    * by ITS OWN sentinel, this run's by today's, and `above_min_norm`
-    * flags only drift the host shift does NOT explain — empty on a
-    * pure host-shift day by construction. Raw `above_min` stays as the
-    * absolute lens; pre-sentinel artifacts simply don't contribute
-    * normalized minima (the lens warms up over rounds).
-    */
-  private def sentinelSec(spark: SparkSession): Double =
-    (1 to 3).map { _ =>
-      val t0 = System.nanoTime()
-      spark.range(0L, 150000000L, 1,
-          spark.sparkContext.defaultParallelism)
-        .selectExpr( // % bounds the summands: 150M · 1e9 ≪ Long.Max,
-          // so the one-stage sum can never ANSI-overflow
-          "sum(xxhash64(id, id + 1, 'graft_sentinel') % 1000000007)")
-        .head()
-      (System.nanoTime() - t0) / 1e9
-    }.min
-
-  /** BANDWIDTH sentinel (round-16 finding): the CPU sentinel above
-    * cannot see a neighbor saturating the MEMORY BUS — the r16 steady
-    * capture took three attempts because /proc/stat steal read ~0
-    * while the bandwidth-bound rows (embeddings fdot scans, image
-    * codecs) ran 2x slow and CPU-bound rows were unaffected. This
-    * sentinel is deliberately bus-bound: 8 threads stream a 512 MiB
-    * long array (far past LLC, pure sequential loads, ~no ALU work),
-    * so bus contention moves THIS number while the CPU sentinel
-    * holds — the roaming-cluster pattern becomes a one-line diagnosis.
-    * Timed best-of-3 at sweep start and end like the CPU sentinel;
-    * recorded observationally this round (normalization can join the
-    * above_min_norm lens once history carries it). */
-  private lazy val bwBlock: Array[Long] = {
-    val a = new Array[Long](1 << 26) // 64M longs = 512 MiB
-    var i = 0
-    while (i < a.length) { a(i) = i.toLong; i += 1 }
-    a
-  }
-
-  private def sentinelBwSec(): Double = (1 to 3).map { _ =>
-    val threads = 8
-    val part = bwBlock.length / threads
-    val sums = new java.util.concurrent.atomic.LongAdder
-    val t0 = System.nanoTime()
-    val ts = (0 until threads).map { t =>
-      new Thread(() => {
-        var acc = 0L
-        var i = t * part
-        val end = i + part
-        while (i < end) { acc += bwBlock(i); i += 1 }
-        sums.add(acc)
-      })
-    }
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    // keep the loads live (the sum over 0..n-1 is never 42)
-    require(sums.sum != 42L, "bandwidth sentinel sum sanity")
-    (System.nanoTime() - t0) / 1e9
-  }.min
-
-  private def median(xs: Vector[Double]): Double = {
-    val s = xs.sorted
-    val n = s.length
-    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2.0
-  }
-
-  /** Per-query variance model over the clean-artifact history (ROADMAP
-    * r13 #4): robust location = median, robust scale = 1.4826·MAD
-    * (the normal-consistency constant), floored at 5% of the median
-    * and 50 ms so a historically flat query can't produce an
-    * infinitely tight envelope. The artifact then self-reports a
-    * COMPUTED per-query confidence statement — `var_z` is how many
-    * robust standard deviations this run sits above its own history —
-    * instead of the one-size 1.5× minima heuristic (which stays, as
-    * the fallback for queries with < 4 clean observations). A flag
-    * needs z > 3 AND > 0.5 s absolute so sub-second queries don't
-    * flag on scheduler jitter.
-    */
-  private def varModel(hist: Map[String, Vector[Double]])
-      : Map[String, (Double, Double, Int)] =
-    hist.collect { case (k, xs) if xs.length >= 4 =>
-      val med = median(xs)
-      val mad = median(xs.map(x => math.abs(x - med)))
-      val scale = math.max(1.4826 * mad, math.max(0.05 * med, 0.05))
-      k -> ((med, scale, xs.length))
-    }
-
-  /** Static contention-sensitivity tag per query (ROADMAP r17 #5),
-    * derived from the round-16 roaming-contention adjudication: with a
-    * neighbor saturating the MEMORY BUS (steal ≈ 0 throughout), the
-    * rows that inflated ~2× in-sweep while measuring clean in isolated
-    * A/Bs were exactly the embeddings-heavy vector cluster (v_*,
-    * d_embed_*: float-array streaming dominates) and the image/audio
-    * codec cluster (m_*: pixel/PCM buffers) — the CPU-bound rest of
-    * the registry ran at or under its historical times on the same
-    * passes (run-2 median ratio 0.927). The tag is advisory metadata:
-    * above_min / var_flagged entries carry it so a bandwidth-
-    * contention day reads as "the flagged set is the bandwidth set"
-    * without a fresh adjudication, and the bandwidth sentinel is the
-    * confirming signal. */
-  private def sensitivityOf(q: String): String =
-    if (q.startsWith("v_") || q.startsWith("m_") ||
-        q.startsWith("d_embed")) "bandwidth" else "cpu"
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val runSteal0 = stealJiffies()
-    val loadStart = loadAvg1m()
-    val skew = new SkewListener
-    spark.sparkContext.addSparkListener(skew)
-    // untimed warmup: absorbs JVM/codegen/parquet-reader startup so the
-    // first timed query isn't charged ~4s of one-time cost
+  private def warmUp(spark: SparkSession, sfDir: String): Unit = {
     try SparkEntry.queries("a1_count")(spark, sfDir).count()
     catch { case _: Throwable => }
-    // codec warmup: ImageIO's plugin-registry scan, PNG reader/writer
-    // class loading, and the getRGB sampling loops initialize/JIT once
-    // per JVM — local mode shares the JVM with executors, so warming
-    // them here (a few hundred tiny encode/decode/sample cycles, sub-
-    // second) keeps that one-time + JIT cost out of the m_* codec rows
-    // (m_resize_real was the r14 steady sweep's only above-minimum row)
     try {
       var i = 0
       var sink = 0L
@@ -309,450 +68,93 @@ object Bench {
       }
       if (sink == Long.MinValue) System.err.println("") // keep `sink` live
     } catch { case _: Throwable => }
-    val oneshot = sys.env.get("SPARK_GRAFT_BENCH_ONESHOT").contains("1") ||
-      sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    // SPARK_GRAFT_BENCH_FULL_STEADY=1: the full sweep runs TWO passes
-    // and reports the per-query min — pass 1 absorbs codegen/plan
-    // compile, so the reported number is steady-state throughput,
-    // COMPARABLE with the best-of-3 headline history (the r14 drift
-    // attribution showed the one-shot full sweep's times mixing lenses
-    // with the best-of-3 minima, which costs a judge adjudication per
-    // apparent above_min row). Costs 2× sweep wall-clock — opt-in.
-    val fullSteady =
-      sys.env.get("SPARK_GRAFT_BENCH_FULL_STEADY").contains("1") &&
-        sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    val passes = if (fullSteady) 2 else if (oneshot) 1 else 3
-    // SPARK_GRAFT_BENCH_ONLY=q1,q2: restrict to a comma-separated subset
-    // (local iteration / regression isolation); unset = full headline set.
-    // SPARK_GRAFT_BENCH_FULL=1: time EVERY registered query (the ~50
-    // cheap ones outside the headline set otherwise never get a
-    // wall-time), single-pass to keep the full sweep bounded.
-    val full = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).toSet)
-    // ONLY may name ANY registered query (not just the headline set) —
-    // it exists for regression isolation, and non-headline queries need
-    // best-of-3 steady-state numbers too
-    val base =
-      if (full || only.isDefined) SparkEntry.queries.keys.toSeq.sorted
-      else SparkEntry.benchQueries
-    val selected = base.filter(n => only.forall(_.contains(n)))
-    // host-day sentinel: timed AFTER warmup (so it measures the host,
-    // not JVM startup), again at sweep end; min of the two normalizes.
-    // r19: steal is measured ACROSS each sentinel window — a sentinel
-    // whose own ~1-4 s window saw no steal is a TRUE host reading even
-    // when the sweep's total steal tripped `contended` (this session's
-    // host ran the ALU sentinel 4.5× above the r17/r18 clean median
-    // ALL day with ~0 steal during the windows; the historical clean
-    // envelope alone would leave every capture unnormalizable on a
-    // genuinely-slower host, which is exactly the drift the sentinel
-    // exists to normalize).
-    val ss0 = stealJiffies()
-    val sentinelStart = sentinelSec(spark)
-    val ss1 = stealJiffies()
-    System.err.println(f"[bench] sentinel_start $sentinelStart%.3f s")
-    val sentinelBwStart = sentinelBwSec()
-    val ss2 = stealJiffies()
-    val sentinelStartSteal =
-      if (ss0 >= 0 && ss1 >= 0) (ss1 - ss0) / 100.0 else -1.0
-    val sentinelBwStartSteal =
-      if (ss1 >= 0 && ss2 >= 0) (ss2 - ss1) / 100.0 else -1.0
-    System.err.println(
-      f"[bench] sentinel_bw_start $sentinelBwStart%.3f s")
-    skew.drainWorstRatio() // don't charge warmup stages to the first query
-    // headline subset (SparkEntry.benchQueries) — representative, bounded
+  }
+
+  /** The queries to time, in run order, from the environment `env`. */
+  private[graft] def selectQueries(env: Map[String, String]): Seq[String] = {
+    val registered = SparkEntry.queries.keys.toSeq.sorted
+    env.get("SPARK_GRAFT_BENCH_ONLY") match {
+      case Some(list) =>
+        val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+        require(names.nonEmpty, "SPARK_GRAFT_BENCH_ONLY names no query")
+        val unknown = names.filterNot(SparkEntry.queries.contains)
+        require(unknown.isEmpty, "SPARK_GRAFT_BENCH_ONLY names " +
+          s"unregistered queries: ${unknown.toSeq.sorted.mkString(", ")}")
+        registered.filter(names)
+      case None =>
+        if (env.get("SPARK_GRAFT_BENCH_FULL").contains("1")) registered
+        else SparkEntry.benchQueries
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val selected = selectQueries(sys.env)
+    val passes =
+      if (sys.env.get("SPARK_GRAFT_BENCH_ONESHOT").contains("1")) 1 else 3
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    warmUp(spark, sfDir)
+    // per query: each pass's (wall seconds, or None if it threw; steal s)
     val timed = selected.map { name =>
       val fn = SparkEntry.queries(name)
-      val ts = (1 to passes).map { _ =>
+      val ts = (1 to passes).map { pass =>
         val st0 = stealJiffies()
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        val st1 = stealJiffies()
-        spark.catalog.clearCache() // per-query cache lifetime (see Verify)
-        // steal delta in seconds (USER_HZ=100), summed across all CPUs —
-        // a pass whose wall time is burst-inflated shows it right here
-        val steal = if (st0 >= 0 && st1 >= 0) (st1 - st0) / 100.0 else -1.0
-        (dt, steal)
-      }
-      // worst per-stage max/mean task-time ratio over this query's passes
-      val worstSkew = skew.drainWorstRatio()
-      System.err.println(f"[bench] ${java.time.Instant.now()} $name%-22s " +
-        ts.map { case (t, s) => f"$t%7.2f (steal $s%5.1f)" }.mkString(" ") +
-        f" s  skew $worstSkew%.1fx")
-      name -> (ts, worstSkew)
-    }
-    val results = timed.map { case (n, (ts, _)) => n -> ts.map(_._1).min }
-      .toMap
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val allPasses = timed.map { case (k, (ts, _)) =>
-      s"\"" + k + "\":[" + ts.map(_._1).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val allSteal = timed.map { case (k, (ts, _)) =>
-      s"\"" + k + "\":[" + ts.map(_._2).mkString(",") + "]"
-    }.mkString("{", ",", "}")
-    val allSkew = timed.map { case (k, (_, w)) =>
-      s"\"" + k + "\":" + f"$w%.2f"
-    }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
-    timed.collect { case (k, (_, w)) if w >= 3.0 =>
-      System.err.println(f"[skew] $k worst max/mean $w%.1fx")
-    }
-    // partition-balance offenders (worst per-stage max/mean task time
-    // >= 3×) surfaced in the COMPACT artifact too, so a skew regression
-    // is machine-checkable round over round like above_min — the full
-    // per-query skew map stays in the side file
-    val skewAbove = timed.collect { case (k, (_, w)) if w >= 3.0 =>
-      f""""$k":$w%.2f"""
-    }.mkString("{", ",", "}")
-    val mode = if (fullSteady) "full-surface-best-of-2"
-      else if (full) "full-surface-one-shot"
-      else if (oneshot) "one-shot" else "best-of-3"
-    // run-level contention self-defense: cumulative steal over the whole
-    // run, 1-min loadavg at both ends, and an explicit contended flag
-    // when ANY pass's steal delta exceeds the threshold (default 1.0 s —
-    // clean passes on this host measure <=0.2 s; the r8 phantom
-    // regression showed 1.15-9.59 s bursts). A true flag means: compare
-    // per-query MINs against a clean re-run before calling a regression.
-    val se0 = stealJiffies()
-    val sentinelEnd = sentinelSec(spark)
-    val se1 = stealJiffies()
-    System.err.println(f"[bench] sentinel_end $sentinelEnd%.3f s")
-    val sentinelBwEnd = sentinelBwSec()
-    val se2 = stealJiffies()
-    val sentinelEndSteal =
-      if (se0 >= 0 && se1 >= 0) (se1 - se0) / 100.0 else -1.0
-    val sentinelBwEndSteal =
-      if (se1 >= 0 && se2 >= 0) (se2 - se1) / 100.0 else -1.0
-    System.err.println(f"[bench] sentinel_bw_end $sentinelBwEnd%.3f s")
-    // per class, prefer the min over STEAL-CLEAN windows (≤0.05 s
-    // across the window — a trusted host reading); only when both
-    // windows caught steal fall back to the plain min, which then
-    // faces the historical clean-envelope gate below
-    def pickSentinel(start: Double, startSteal: Double,
-        end: Double, endSteal: Double): (Double, Double) = {
-      val all = Seq((start, startSteal), (end, endSteal))
-        .filter(_._1 > 0)
-      val clean = all.filter { case (_, st) => st >= 0 && st <= 0.05 }
-      (if (clean.nonEmpty) clean else all)
-        .minByOption(_._1).getOrElse((-1.0, -1.0))
-    }
-    val (sentinelNow, sentinelNowSteal) = pickSentinel(
-      sentinelStart, sentinelStartSteal, sentinelEnd, sentinelEndSteal)
-    val (sentinelBwNow, sentinelBwNowSteal) = pickSentinel(
-      sentinelBwStart, sentinelBwStartSteal,
-      sentinelBwEnd, sentinelBwEndSteal)
-    val runSteal1 = stealJiffies()
-    val loadEnd = loadAvg1m()
-    val runStealSec =
-      if (runSteal0 >= 0 && runSteal1 >= 0) (runSteal1 - runSteal0) / 100.0
-      else -1.0
-    val stealFlagAt = sys.env.get("SPARK_GRAFT_STEAL_FLAG")
-      .flatMap(_.toDoubleOption).getOrElse(1.0)
-    val contended = timed.exists { case (_, (ts, _)) =>
-      ts.exists(_._2 > stealFlagAt) }
-    // contended-bit granularity (ROADMAP r20 #3): the strict bit flips
-    // on ANY single pass whose steal delta exceeds the threshold — over
-    // a 27-minute, ~580-pass full sweep this hypervisor never stayed
-    // under it for a whole session while 15-minute headline windows
-    // did, so the strictly-false bit on FULL sweeps was structurally
-    // unreachable even on runs whose every row had burst-free evidence.
-    // The artifact now carries its own per-pass verdict alongside:
-    //  - n_dirty_passes: how many (query, pass) timings caught a burst
-    //    (the damage is bounded and countable, not a boolean);
-    //  - effectively_clean: every query has at least one MEASURED
-    //    steal-clean pass — exactly the evidence standard the minima
-    //    fold already applies per query, so an effectively_clean
-    //    capture's per-query mins are all burst-free observations even
-    //    when the strict bit is true. Strict `contended` keeps its
-    //    meaning (and keeps gating sentinel trust above).
-    val dirtyPasses = timed.map { case (_, (ts, _)) =>
-      ts.count(_._2 > stealFlagAt) }.sum
-    val effectivelyClean = timed.nonEmpty && timed.forall {
-      case (_, (ts, _)) =>
-        ts.exists { case (_, s) => s >= 0 && s <= stealFlagAt } }
-    val hostFields =
-      f""""run_steal_sec":$runStealSec%.2f,"load_start":$loadStart%.2f,""" +
-        f""""load_end":$loadEnd%.2f,"contended":$contended,""" +
-        s""""n_dirty_passes":$dirtyPasses,""" +
-        s""""effectively_clean":$effectivelyClean"""
-    // minima lens: which of THIS run's times exceed the per-query
-    // historical clean minimum beyond the noise envelope (>1.5× AND
-    // >0.5 s over). On a contended run the list is the steal damage
-    // report; on a clean run a non-empty list is a real regression
-    // candidate. Compact line carries only the offenders (the stdout
-    // tail is size-bounded); the side file carries the full minima map.
-    val arts = benchArtifacts(new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo")), sfDir)
-    val hist = benchHistory(arts)
-    val minima = benchMinima(hist)
-    // sentinel-normalized minima: each artifact's times in units of
-    // its own SENS-APPROPRIATE sentinel (r17, ROADMAP r18 #4 pulled
-    // forward): bandwidth-tagged rows normalize by the BANDWIDTH
-    // sentinel, cpu rows by the CPU sentinel — the r17 clean capture's
-    // only above_min_norm rows were bandwidth rows whose RATIO
-    // inflated because the CPU sentinel ran fast on a quiet day while
-    // memory-bound work held flat; the CPU sentinel is simply the
-    // wrong normalizer for that cluster. Sentinel-less history is
-    // skipped — no guessing (pre-r16 artifacts carry no bw sentinel,
-    // so bandwidth rows' normalized history warms up from r16b on).
-    // CONTENDED artifacts need one more gate (r16 advice): the
-    // per-pass steal filter cleans their query times, but nothing
-    // cleans their SENTINELS — a burst landing on both sentinel
-    // windows inflates them, deflating every normalized time and
-    // permanently poisoning min_norm. A contended artifact's sentinel
-    // is trusted only if it sits inside the clean-artifact envelope
-    // (≤ 1.25× the clean median) for THAT sentinel; otherwise the
-    // artifact contributes nothing normalized for rows of that class.
-    def cleanMed(sent: HistArtifact => Double): Double = {
-      val xs = arts.collect {
-        case a if !a.contended && sent(a) > 0 => sent(a) }
-      if (xs.nonEmpty) median(xs) else -1.0
-    }
-    val medCpu = cleanMed(_.sentinel)
-    val medBw = cleanMed(_.sentinelBw)
-    val envCpu = if (medCpu > 0) medCpu * 1.25 else -1.0
-    val envBw = if (medBw > 0) medBw * 1.25 else -1.0
-    // PROPORTIONALITY BAND (r19 continuation — the normalized-lens
-    // validation on the new silicon FAILED and this is the
-    // adjudication): sentinel-normalization assumes query times shift
-    // WITH the sentinel (the uniform host-day drift the lens was built
-    // for, r14/r15 +8%). The r19 slow-ALU silicon broke that: its
-    // sentinel ran 4.5× the clean median while most query minima held
-    // flat — only ALU-tight loops paid the factor — so folding those
-    // (genuinely steal-clean!) sentinels into normalized history
-    // deflated min_norm for every cpu row and the next fast-silicon
-    // capture flagged 4-7× ratios across the board. A sentinel outside
-    // [med/1.25, med·1.25] of the clean history is a TRUE reading of a
-    // DIFFERENT silicon profile, not a uniform shift — proportional
-    // normalization is invalid in both directions, so such artifacts
-    // contribute nothing normalized and such days read nothing
-    // normalized (the lens goes explicitly dark via
-    // sentinel_untrusted, never silently wrong).
-    def inBand(sv: Double, med: Double): Boolean =
-      med <= 0 || (sv <= med * 1.25 && sv >= med / 1.25)
-    def sentOf(a: HistArtifact, q: String): Double = {
-      val bw = sensitivityOf(q) == "bandwidth"
-      val sv = if (bw) a.sentinelBw else a.sentinel
-      val ownSteal = if (bw) a.sentinelBwSteal else a.sentinelSteal
-      val env = if (bw) envBw else envCpu
-      val med = if (bw) medBw else medCpu
-      if (sv <= 0) -1.0
-      // r19: a measured steal-clean sentinel window is trusted
-      // outright as a HOST READING; the clean-envelope check remains
-      // the fallback for artifacts (pre-r19) that never recorded
-      // their windows' steal
-      else if (a.contended && !(ownSteal >= 0 && ownSteal <= 0.05) &&
-          !(env > 0 && sv <= env)) -1.0
-      // ...but a true reading outside the proportionality band is a
-      // silicon-profile change — normalization by it is invalid
-      else if (!inBand(sv, med)) -1.0
-      else sv
-    }
-    val minimaNorm = benchMinima(
-      arts.foldLeft(Map.empty[String, Vector[Double]]) { (acc, a) =>
-        a.queries.foldLeft(acc) { case (m, (k, v)) =>
-          val sv = sentOf(a, k)
-          if (sv > 0) m.updated(k, m.getOrElse(k, Vector.empty) :+ v / sv)
-          else m
-        }
-      })
-    val aboveMin = results.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-      minima.get(k).collect {
-        case m if m > 0 && v > m * 1.5 && v - m > 0.5 =>
-          k -> (f""""$k":{"sec":$v%.2f,"min":$m%.2f,""" +
-            f""""ratio":${v / m}%.2f,""" +
-            s""""sens":"${sensitivityOf(k)}"}""")
-      }
-    }
-    val aboveMinJson = aboveMin.map(_._2).mkString("{", ",", "}")
-    // the normalized lens: same 1.5×/0.5 s envelope, but in sentinel
-    // units — a uniform host-day shift moves v and today's sentinel
-    // together, so only drift the host does NOT explain survives (the
-    // absolute threshold converts back to today's seconds). Each row
-    // uses its sens-appropriate sentinel, matching the history above.
-    // TODAY'S sentinels get a trust gate on contended runs (r17
-    // advice): a burst landing on both sentinel windows inflates
-    // sentinelNow and DEFLATES every normalized ratio — silencing
-    // this lens exactly when it is needed. Trust (r19 refinement) is
-    // now MEASURED first: a sentinel whose own window was steal-clean
-    // (sentinelNowSteal ≤ 0.05 s) is a true host reading whatever the
-    // sweep total did — that is precisely the slower-host case the
-    // normalization exists for; only a sentinel whose windows BOTH
-    // caught steal falls back to the historical clean-envelope check.
-    // An untrusted class contributes NOTHING normalized today (rows
-    // of that class drop out of above_min_norm) and the artifact
-    // carries an explicit sentinel_untrusted marker so an empty lens
-    // is readable as "not checked", never "clean".
-    // A class is untrusted today when (a) on a contended run its
-    // sentinel windows caught steal AND it sits outside the clean
-    // envelope (burst suspicion — can't tell burst from host), or
-    // (b) the sentinel is a true reading OUTSIDE the proportionality
-    // band (silicon-profile day — normalizing by it would be wrong,
-    // not just noisy; see the band comment above).
-    val untrustedClasses =
-      Seq("cpu" -> ((sentinelNow, sentinelNowSteal, envCpu, medCpu)),
-          "bandwidth" ->
-            ((sentinelBwNow, sentinelBwNowSteal, envBw, medBw))).collect {
-        case (cls, (sNow, ownSteal, env, med))
-            if (contended && !(ownSteal >= 0 && ownSteal <= 0.05) &&
-              !(env > 0 && sNow <= env)) ||
-              !inBand(sNow, med) => cls
-      }
-    val aboveMinNorm =
-      results.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-        val bw = sensitivityOf(k) == "bandwidth"
-        val sNow = if (bw) sentinelBwNow else sentinelNow
-        val cls = if (bw) "bandwidth" else "cpu"
-        if (sNow <= 0 || untrustedClasses.contains(cls)) Seq.empty
-        else {
-          val vn = v / sNow
-          minimaNorm.get(k).collect {
-            case m if m > 0 && vn > m * 1.5 &&
-                (vn - m) * sNow > 0.5 =>
-              k -> (f""""$k":{"sec":$v%.2f,"norm":$vn%.2f,""" +
-                f""""min_norm":$m%.2f,""" +
-                f""""ratio":${vn / m}%.2f,""" +
-                s""""sens":"${sensitivityOf(k)}"}""")
-          }
-        }
-      }
-    val aboveMinNormJson = aboveMinNorm.map(_._2).mkString("{", ",", "}")
-    val minimaJson = minima.toSeq.sortBy(_._1)
-      .map { case (k, v) => f""""$k":$v%.3f""" }.mkString("{", ",", "}")
-    // variance-model verdicts: a computed per-query confidence
-    // statement (robust z vs own history) — see varModel
-    val model = varModel(hist)
-    val varFlagged = results.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-      model.get(k).collect {
-        case (med, s, n) if (v - med) / s > 3.0 && v - med > 0.5 =>
-          k -> (f""""$k":{"sec":$v%.2f,"med":$med%.2f,""" +
-            f""""z":${(v - med) / s}%.1f,"n":$n,""" +
-            s""""sens":"${sensitivityOf(k)}"}""")
-      }
-    }
-    val varFlaggedJson = varFlagged.map(_._2).mkString("{", ",", "}")
-    // automated drift adjudication (ROADMAP r18 #1 institutionalized):
-    // a row flagged by ALL THREE lenses (absolute minima, sentinel-
-    // normalized, variance model) historically cost a MANUAL isolated
-    // best-of-3 to separate in-sweep inflation (page-cache
-    // displacement by preceding heavy queries — the d_cluster_topics
-    // r17 profile) from real code creep. Rerun exactly those rows in
-    // isolation at sweep end and record `isolated_sec`: an isolated
-    // min near the historical minimum reads as in-sweep inflation in
-    // one line; an isolated min near the flagged time corroborates a
-    // regression.
-    val tripleFlagged = aboveMin.map(_._1).toSet
-      .intersect(aboveMinNorm.map(_._1).toSet)
-      .intersect(varFlagged.map(_._1).toSet)
-    // r19 extension (r18 verdict #3): a row can clear the variance
-    // model yet exceed its sentinel-normalized minimum (the
-    // l_rollup_maintained / m_decode_real r18d profile) — rerun ANY
-    // normalized-flagged row too, triple-flagged first, capped so a
-    // broadly-flagged contended sweep can't double its own wall-clock;
-    // dropped rows are named on stderr (no silent caps).
-    val isolateCap = 8
-    // norm-dark fallback (r19 continuation): when a class's normalized
-    // lens is untrusted, triple-flagging is impossible for its rows —
-    // a row flagged by BOTH remaining lenses (absolute minima AND
-    // variance model) would never isolate. Treat that pair as
-    // triple-equivalent for rows of an untrusted class.
-    val doubleFlaggedDark = aboveMin.map(_._1).toSet
-      .intersect(varFlagged.map(_._1).toSet)
-      .filter(k => untrustedClasses.contains(sensitivityOf(k)))
-    val isolateAll = tripleFlagged.toSeq.sorted ++
-      doubleFlaggedDark.toSeq.sorted.filterNot(tripleFlagged) ++
-      aboveMinNorm.map(_._1)
-        .filterNot(k => tripleFlagged(k) || doubleFlaggedDark(k))
-    val toIsolate = isolateAll.distinct.take(isolateCap)
-    if (isolateAll.distinct.size > isolateCap)
-      System.err.println("[bench] isolated rerun CAPPED at " +
-        s"$isolateCap — not rerun: " +
-        isolateAll.distinct.drop(isolateCap).mkString(", "))
-    val isolatedSec = toIsolate.map { k =>
-      val fn = SparkEntry.queries(k)
-      // a crashing pass records -1, NEVER its elapsed time-to-failure
-      // (r18 advice: a fast failure would read as "in-sweep
-      // inflation, not a regression" — the opposite of the truth)
-      val ts = (1 to 3).map { _ =>
         val t0 = System.nanoTime()
         val ok =
           try { fn(spark, sfDir).count(); true }
           catch { case e: Throwable =>
-            System.err.println(s"[bench] isolated rerun $k FAILED: " +
+            System.err.println(s"[bench] $name pass $pass FAILED: " +
               s"${e.getClass.getSimpleName}: ${e.getMessage}")
             false
           }
         val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        if (ok) dt else -1.0
+        val st1 = stealJiffies()
+        spark.catalog.clearCache() // per-query cache lifetime (see Verify)
+        // steal delta in seconds (USER_HZ=100), summed across all CPUs
+        val steal = if (st0 >= 0 && st1 >= 0) (st1 - st0) / 100.0 else -1.0
+        (Option.when(ok)(dt), steal)
       }
-      val good = ts.filter(_ >= 0)
-      val best = if (good.nonEmpty) good.min else -1.0
-      System.err.println(
-        f"[bench] isolated rerun $k%-22s min $best%.2f s " +
-          s"(passes ${ts.map(t => f"$t%.2f").mkString(" ")})")
-      k -> best
+      System.err.println(f"[bench] ${java.time.Instant.now()} $name%-22s " +
+        ts.map { case (t, s) =>
+          t.fold("FAILED")(v => f"$v%7.2f") + f" (steal $s%5.1f)"
+        }.mkString(" ") + " s")
+      name -> ts
     }
-    val isolatedJson = isolatedSec
-      .map { case (k, v) => f""""$k":$v%.2f""" }.mkString("{", ",", "}")
-    // full static tag map in the side file only (the compact stdout
-    // line stays bounded; flagged entries already carry their tag)
-    val sensJson = selected.sorted
-      .map(k => s""""$k":"${sensitivityOf(k)}"""")
-      .mkString("{", ",", "}")
-    val varModelJson = model.toSeq.sortBy(_._1)
-      .map { case (k, (med, s, n)) =>
-        f""""$k":{"med":$med%.3f,"scale":$s%.3f,"n":$n}"""
-      }.mkString("{", ",", "}")
-    // stdout gets a COMPACT line: the driver keeps only a ~2000-char tail
-    // of the run's output, and the full line with per-pass detail (~3 KB)
-    // overflowed it every round (BENCH_r04/r05 "parsed": null — the
-    // leading {"metric": was cut off). Per-pass detail goes to stderr and
-    // the side file instead; the headline stdout line stays parseable.
-    val sentinelFields =
-      f""""sentinel_sec":$sentinelNow%.3f,""" +
-        f""""sentinel_start":$sentinelStart%.3f,""" +
-        f""""sentinel_end":$sentinelEnd%.3f,""" +
-        f""""sentinel_steal_sec":$sentinelNowSteal%.2f,""" +
-        f""""sentinel_bw_sec":$sentinelBwNow%.3f,""" +
-        f""""sentinel_bw_start":$sentinelBwStart%.3f,""" +
-        f""""sentinel_bw_end":$sentinelBwEnd%.3f,""" +
-        f""""sentinel_bw_steal_sec":$sentinelBwNowSteal%.2f,""" +
-        s""""above_min_norm":$aboveMinNormJson,""" +
-        s""""sentinel_untrusted":${
-          untrustedClasses.map(c => s""""$c"""").mkString("[", ",", "]")
-        },""" +
-        s""""n_minima_norm":${minimaNorm.size}"""
-    val json =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""mode":"$mode",$hostFields,""" +
-        s""""above_min":$aboveMinJson,"n_minima":${minima.size},""" +
-        s"""$sentinelFields,""" +
-        s""""var_flagged":$varFlaggedJson,"n_model":${model.size},""" +
-        s""""isolated_sec":$isolatedJson,""" +
-        s""""skew_above":$skewAbove,"sf":"$sfDir"}"""
-    val jsonFull =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""mode":"$mode","passes":$allPasses,""" +
-        s""""steal_sec_per_pass":$allSteal,""" +
-        s""""skew_worst_ratio":$allSkew,$hostFields,""" +
-        s""""above_min":$aboveMinJson,"n_minima":${minima.size},""" +
-        s"""$sentinelFields,""" +
-        s""""var_flagged":$varFlaggedJson,"n_model":${model.size},""" +
-        s""""isolated_sec":$isolatedJson,""" +
-        s""""var_model":$varModelJson,"sens_tags":$sensJson,""" +
-        s""""minima":$minimaJson,"skew_above":$skewAbove,"sf":"$sfDir"}"""
-    System.err.println(s"[bench] passes: $allPasses")
-    System.err.println(s"[bench] steal_sec_per_pass: $allSteal")
-    println(json)
-    // the stdout line drowns in sbt/log4j decoration when run under sbt
-    // (BENCH_r01 parsed: null) — also write it to a plain file the driver
-    // can always read
+    val failed = timed.collect { case (k, ts) if ts.exists(_._1.isEmpty) => k }
+    if (failed.nonEmpty) {
+      System.err.println(s"[bench] ${failed.size} failed " +
+        s"quer${if (failed.size == 1) "y" else "ies"}: ${failed.mkString(", ")}")
+      spark.stop()
+      sys.exit(1)
+    }
+    def obj(fields: Seq[(String, String)]): String =
+      fields.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val results = timed.map { case (k, ts) => k -> ts.flatMap(_._1).min }
+    val total = results.map(_._2).sum
+    val mode = if (passes == 1) "one-shot" else "best-of-3"
+    val head = s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${obj(results.map { case (k, v) => k -> v.toString })},""" +
+      s""""mode":"$mode""""
+    val allPasses = obj(timed.map { case (k, ts) =>
+      k -> ts.flatMap(_._1).mkString("[", ",", "]") })
+    val allSteal = obj(timed.map { case (k, ts) =>
+      k -> ts.map(_._2).mkString("[", ",", "]") })
+    // stdout keeps a COMPACT line: the bench gate reads only a ~2000-char
+    // tail of the run's output, so per-pass detail goes to the side file
+    println(s"""$head,"sf":"$sfDir"}""")
+    // the stdout line drowns in sbt/log4j decoration when run under sbt —
+    // also write it to a plain file the bench gate can always read
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "/tmp/graft_bench.json")
+    val full = s"""$head,"passes":$allPasses,""" +
+      s""""steal_sec_per_pass":$allSteal,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get(out),
-      (jsonFull + "\n").getBytes("UTF-8"))
+      (full + "\n").getBytes("UTF-8"))
     catch { case e: Throwable => System.err.println(s"[bench] $out: $e") }
     spark.stop()
   }

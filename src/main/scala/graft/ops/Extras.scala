@@ -1734,7 +1734,7 @@ object Extras {
       val cut = mm.getLong(0) + (mm.getLong(1) - mm.getLong(0)) * 19 / 20
       // phase 1: the maintained distance table (previous run's output
       // on the old graph) — PERSISTENT across runs (Replay
-      // .maintainedDir): in deployment the state table outlives a run
+      // .maintainedGen): in deployment the state table outlives a run
       // and a tick pays only the delta, so the first run builds it and
       // steady reruns (bench passes 2+) go straight to phase 2. The
       // key pins every input the state depends on; the full-graph

@@ -64,18 +64,6 @@ object Streams {
       .agg(count("*").as("n"))
       .select(col("w.start").as("ws"), col("n"))
 
-  /** Session windows (30-minute gap) per user under watermark — twin of
-    * "e_session".
-    */
-  def sessionized(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "10 minutes")
-      .groupBy(session_window(col("ts"), "30 minutes").as("w"),
-        col("user_id"))
-      .agg(count("*").as("n_events"))
-      .select(col("user_id"), col("w.start").as("session_start"),
-        col("w.end").as("session_end"), col("n_events"))
-
   /** Stateful exactly-once-per-key dedup bounded by the watermark — the
     * streaming version of exact dedup (state is GC'd once event-time
     * passes the watermark, so state size is bounded at any scale).
@@ -504,11 +492,11 @@ object Streams {
     }
   }
 
-  /** Run a streaming query to completion over the files currently present
-    * (Trigger.AvailableNow — the batch-parity mode), writing to an
-    * in-memory table. Returns the drained query. This is the "bulk job"
-    * lifecycle: start → InProgress → JobComplete.
-    */
+  private def rmTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
+    f.delete(); ()
+  }
+
   /** Crash-safer staged swap for the local-FS maintenance sinks: rename
     * the current state ASIDE, rename the staged version into place, then
     * drop the old copy. A crash at any point leaves a full copy on disk
@@ -523,11 +511,6 @@ object Streams {
     * table format (or the Hadoop FileSystem API with an atomic rename
     * contract); this bounds the local-mode damage.
     */
-  private def rmTree(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-    f.delete(); ()
-  }
-
   private def stagedSwap(stagedPath: String, curPath: String): Unit = {
     def rm(f: java.io.File): Unit = rmTree(f)
     val staged = new java.io.File(stagedPath)
@@ -658,35 +641,6 @@ object Streams {
     }
   }
 
-  /** Incremental rollup maintenance as a streaming sink — the
-    * `l_rollup_merge` loop run CONTINUOUSLY: every micro-batch folds
-    * into a materialized (day × event_type) aggregate table by
-    * re-summing PARTIAL aggregates. The merge input per batch is
-    * |rollup keys| + |batch keys| rows — days × types, never events —
-    * and value sums stay exact decimals end-to-end, so after any number
-    * of batches the table is bit-identical to a full recompute
-    * (StreamsSpec proves it over a 2-batch time-split replay). The
-    * staged-write-then-swap keeps the table readable mid-maintenance;
-    * at production scale the same shape lands on a transactional table
-    * format, with the partial-agg merge unchanged.
-    */
-  /** Append-only streaming maintenance of a derived table: each
-    * micro-batch is transformed and its rows landed as new parquet
-    * part files — the right shape when batches partition the key space
-    * (no cross-batch merge needed), e.g. the MinHash band index, where
-    * a document's band rows depend on that document alone. Unlike the
-    * merge sinks (rollup/MG/CM) there is no read-modify-write and so
-    * no staged swap — but the sink must still be IDEMPOTENT under
-    * foreachBatch's at-least-once redelivery: each batch writes its
-    * own `batch=<id>` subdirectory in OVERWRITE mode, so a
-    * failed-then-retried micro-batch replaces its previous partial
-    * output instead of double-appending band rows (a blind
-    * mode("append") to the root would duplicate; for a deterministic
-    * `transform` the overwrite makes the retry exact). Readers use
-    * [[readMaintained]], which drops the synthetic `batch` partition
-    * column. At production scale the same shape is a transactional
-    * table format's idempotent append commit keyed by batchId.
-    */
   /** The reference's incremental-extract poll loop
     * (`client.query(soql)` re-issued with a `SystemModstamp >=
     * watermark` predicate, client.rs:199-205) as ONE Structured
@@ -720,6 +674,23 @@ object Streams {
       today = today, eventsBase = Some(stream))
   }
 
+  /** Append-only streaming maintenance of a derived table: each
+    * micro-batch is transformed and its rows landed as new parquet
+    * part files — the right shape when batches partition the key space
+    * (no cross-batch merge needed), e.g. the MinHash band index, where
+    * a document's band rows depend on that document alone. Unlike the
+    * merge sinks (rollup/MG/CM) there is no read-modify-write and so
+    * no staged swap — but the sink must still be IDEMPOTENT under
+    * foreachBatch's at-least-once redelivery: each batch writes its
+    * own `batch=<id>` subdirectory in OVERWRITE mode, so a
+    * failed-then-retried micro-batch replaces its previous partial
+    * output instead of double-appending band rows (a blind
+    * mode("append") to the root would duplicate; for a deterministic
+    * `transform` the overwrite makes the retry exact). Readers use
+    * [[readMaintained]], which drops the synthetic `batch` partition
+    * column. At production scale the same shape is a transactional
+    * table format's idempotent append commit keyed by batchId.
+    */
   def appendMaintain(stream: DataFrame, path: String)(
       transform: DataFrame => DataFrame): StreamingQuery =
     startScaledToDelta(stream.sparkSession) {
@@ -934,6 +905,18 @@ object Streams {
     rmTree(new java.io.File(path + "_compact"))
   }
 
+  /** Incremental rollup maintenance as a streaming sink — the
+    * `l_rollup_merge` loop run CONTINUOUSLY: every micro-batch folds
+    * into a materialized (day × event_type) aggregate table by
+    * re-summing PARTIAL aggregates. The merge input per batch is
+    * |rollup keys| + |batch keys| rows — days × types, never events —
+    * and value sums stay exact decimals end-to-end, so after any number
+    * of batches the table is bit-identical to a full recompute
+    * (StreamsSpec proves it over a 2-batch time-split replay). The
+    * staged-write-then-swap keeps the table readable mid-maintenance;
+    * at production scale the same shape lands on a transactional table
+    * format, with the partial-agg merge unchanged.
+    */
   def rollupMaintain(events: DataFrame, rollupPath: String,
       checkpoint: Option[String] = None): StreamingQuery =
     maintainWriter(events, checkpoint) { (batch, id) =>
@@ -2245,22 +2228,13 @@ object Streams {
   }
 
   /** GC depth: how many committed generations survive a flip — the
-    * new one plus `genKeep - 1` predecessors. The default (2) gives
-    * every reader one full publish interval of grace: a reader that
-    * resolved the pointer just before a flip still has its files.
-    * Deployments whose readers can straddle MORE than one flip (a
-    * long analytic scan over the maintained table while a fast stream
-    * commits every few seconds) raise it with -Dgraft.gen.keep=N —
-    * disk cost is N×|state|, read cost is unchanged (readers scan one
-    * generation). Values below 2 are refused: keep=1 would delete the
-    * generation a just-resolved reader is scanning, reintroducing the
-    * stagedSwap race the layout exists to close. */
-  private[graft] def genKeep: Int = {
-    val k = Integer.getInteger("graft.gen.keep", 2).intValue()
-    require(k >= 2, s"graft.gen.keep=$k — must be >= 2 (the current " +
-      "generation plus at least one predecessor for in-flight readers)")
-    k
-  }
+    * new one plus one predecessor. That gives every reader one full
+    * publish interval of grace: a reader that resolved the pointer just
+    * before a flip still has its files. Disk cost is 2×|state|, read
+    * cost is one generation. Keeping only the new generation would
+    * delete the one a just-resolved reader is scanning, reintroducing
+    * the stagedSwap race the layout exists to close. */
+  private[graft] val genKeep = 2
 
   /** Commit one batch under the generation layout: `write` lands the
     * new state into a PUBLISHER-UNIQUE next-gen dir (`gen=N-<nonce>`
@@ -2280,7 +2254,6 @@ object Streams {
     * their generation number). */
   private[graft] def publishGen(statePath: String, id: Long)(
       write: String => Unit): Unit = {
-    val keep = genKeep // validate the knob BEFORE any state mutation
     requireNotLegacy(statePath)
     val store = pointerOf(statePath)
     val cur = store.read(statePath)
@@ -2296,7 +2269,7 @@ object Streams {
         "another publisher committed after this batch resolved the " +
         "pointer — this batch's write is an uncommitted orphan " +
         "(two concurrent maintainers on one state dir)")
-    val cutoff = next - (keep - 1)
+    val cutoff = next - (genKeep - 1)
     Option(new java.io.File(statePath).listFiles())
       .getOrElse(Array.empty)
       .filter { f =>
@@ -2416,6 +2389,11 @@ object Streams {
     }
   }
 
+  /** Run a streaming query to completion over the files currently present
+    * (Trigger.AvailableNow — the batch-parity mode), writing to an
+    * in-memory table. Returns the drained query. This is the "bulk job"
+    * lifecycle: start → InProgress → JobComplete.
+    */
   def runAvailableNow(df: DataFrame, name: String,
       outputMode: String = "append",
       timeoutMs: Long = 600000): StreamingQuery = {

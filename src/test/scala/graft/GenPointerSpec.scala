@@ -249,9 +249,9 @@ class GenPointerSpec extends SparkTestBase {
       val dists = Seq((1L, 1L, 0)).toDF("lm", "u", "dist")
       // builder A resolves the (absent) pointer; DURING its artifact
       // writes, builder B completes the same cold build and flips
-      // first. A's conditional flip must fail loudly — the
-      // single-publisher ASSUMPTION maintainedDir documented is an
-      // ENFORCED guarantee under the generation layout.
+      // first. A's conditional flip must fail loudly — a single
+      // publisher is an ENFORCED guarantee under the generation
+      // layout, not an assumption.
       val e = intercept[IllegalArgumentException] {
         Streams.publishGen(statePath, 0L) { g =>
           dists.write.mode("overwrite").parquet(s"$g/dists")

@@ -1459,8 +1459,8 @@ class StreamsSpec extends SparkTestBase {
     assert(Streams.lastAppliedBatch(statePath).contains(1L))
   }
 
-  test("gen GC depth knob: -Dgraft.gen.keep=3 keeps a slow reader's " +
-      "generation alive across TWO pointer flips; keep<2 refuses") {
+  test("gen GC depth: three publishes keep only the current and " +
+      "previous generations") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("gen_keep")
     val statePath = tmp.resolve("cnt").toString
@@ -1471,34 +1471,9 @@ class StreamsSpec extends SparkTestBase {
       .filter(_.getName.startsWith("gen="))
       .map(_.getName.stripPrefix("gen=").takeWhile(_.isDigit).toLong)
       .sorted.toSeq
-    // default depth 2: after three publishes only {current, previous}
-    // remain — one flip of reader grace
+    // depth 2: {current, previous} — one flip of reader grace
     put(0L); put(1L); put(2L)
     assert(gens() == Seq(1L, 2L), s"default GC kept ${gens()}")
-    // keep=3: a reader resolves the pointer (gen=2), then TWO more
-    // batches flip to gen=4 — the resolved generation must still be on
-    // disk and scannable with its as-of contents (count 3 = batches
-    // 0..2), which the default depth would have GC'd
-    System.setProperty("graft.gen.keep", "3")
-    try {
-      val resolved = Streams.currentGenPath(statePath).get
-      val slowReader = spark.read.parquet(resolved)
-      put(3L); put(4L)
-      assert(gens() == Seq(2L, 3L, 4L), s"keep=3 GC kept ${gens()}")
-      assert(slowReader.as[(Long, Long)].collect().toMap ==
-        Map(1L -> 3L),
-        "slow reader's generation was GC'd or rewritten mid-scan")
-      // the live pointer meanwhile serves the newest state
-      assert(Streams.readGenMaintained(spark, statePath)
-        .as[(Long, Long)].collect().toMap == Map(1L -> 5L))
-    } finally System.clearProperty("graft.gen.keep")
-    // keep=1 would delete the generation a just-resolved reader is
-    // scanning — refused before any write happens
-    System.setProperty("graft.gen.keep", "1")
-    try {
-      val ex = intercept[IllegalArgumentException] { put(5L) }
-      assert(ex.getMessage.contains("graft.gen.keep"))
-    } finally System.clearProperty("graft.gen.keep")
   }
 
   test("legacy staged-swap state refuses gen merges until migrated; " +

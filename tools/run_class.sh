@@ -1,7 +1,10 @@
 #!/bin/bash
 # Run a graft main class directly against the sbt-compiled classes + Spark
 # jars (bypasses sbt startup). Usage: tools/run_class.sh graft.Verify ARGS...
+# The classes come from the checkout this script lives in, so a second
+# checkout (tools/ab.sh's base build) runs its own compiled tree.
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
 CLS="$1"; shift
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
@@ -15,5 +18,5 @@ exec java $ADD_OPENS $EXTRA_JAVA_OPTS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$CLS" "$@"
